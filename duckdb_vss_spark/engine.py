@@ -191,8 +191,9 @@ class VSSEngine:
                 out = out.filter(where)
             desc = METRIC_IS_DESCENDING[m]
             order = [F.col(score_col).desc() if desc else F.col(score_col).asc()]
-            if tiebreak:
-                order.append(F.col(tiebreak))
+            # the index's id column breaks score ties unless the caller
+            # names a tiebreak, so the output order is partition-independent
+            order.append(F.col(tiebreak or id_col))
             out = out.orderBy(*order).limit(k)
         else:
             src = df.filter(where) if where else df

@@ -179,7 +179,10 @@ def _beam_search(
         d, i = heapq.heappop(cand)
         if len(result) >= ef and d > -result[0][0]:
             break
-        nb = nbrs[i]
+        # a seeded long-range edge can repeat a near neighbour: keep first
+        # occurrences, or the visited mask below would push that id twice
+        _, first = np.unique(nbrs[i], return_index=True)
+        nb = nbrs[i][np.sort(first)]
         nb = nb[~visited[nb]]
         if nb.size == 0:
             continue

@@ -11,32 +11,20 @@ per image regardless of pixel count — so matching a new batch costs one
 band-bucket join of the batch's hash table against the stored one: the
 historical IMAGE BYTES are never re-read.
 
-Artifact discipline is identical to the sibling stores: append-only
-versioned parquet directory, JSON manifest as the atomic commit point,
-monotonic ``next_snap_id`` dir allocation (:func:`.fs.alloc_snap_dir` —
-dir names are never reused after ``drop_snapshot``), orphan ``snap-*``
-dirs ignored by readers, ``vacuum`` retention, any Hadoop filesystem.
-The banding parameters live in the manifest — band buckets are only
-comparable between identically-banded hashes, so the store owns the
-configuration.
+The artifact format is the shared one of :mod:`.snapshots`; band rows
+are the stored layout, partitioned by ``band``, and the banding lives in
+the manifest.
 
 Matching is the banded-Hamming contract of
 :func:`~duckdb_vss_spark.operators.dedup.hamming_pairs`: candidates
 agree on >= 1 band chunk (complete for ``hamming < bands`` by
 pigeonhole), verification is ``bit_count(xor)`` computed inside the
-join. Round-11 discipline: exact matches bypass banding via an
-equi-join on the hash value (cap-immune), the near band join runs over
-DISTINCT hashes per side with the banding auto-picked from the call's
-bound (:func:`~duckdb_vss_spark.operators.dedup._auto_banding`), and
-hot buckets (boilerplate images — logos, spacers, test cards) are still
-capped so one viral thumbnail in history cannot turn every future
-batch's match quadratic — but any capped drop now emits a
-``RuntimeWarning`` with the dropped fraction (no silent caps). Round-12
-discipline: before accepting any drop, a hot first pass escalates ONCE
-to packed pair keys over the same chunks
-(:func:`~duckdb_vss_spark.operators.dedup._escalate_banding` —
-loss-monotone, and diverse hot-bucket members spread cold under the
-roomier key), so only buckets hot under BOTH keyings are ever dropped.
+join. Exact matches bypass banding via an equi-join on the hash value
+(cap-immune); near matches ride the distinct-hash band join of
+:func:`~duckdb_vss_spark.operators.dedup._near_hash_pairs` (banding
+picked from the call's bound, one escalation on observed skew, and a
+``RuntimeWarning`` before any hot bucket of boilerplate images — logos,
+spacers, test cards — is dropped).
 """
 
 from __future__ import annotations
@@ -46,21 +34,24 @@ from typing import Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import fs
+from . import snapshots
 
 __all__ = ["ImageHashStore"]
-
-_MANIFEST = "manifest.json"
 
 
 class ImageHashStore:
     """Handle on a persisted perceptual-hash dedup artifact. Use
     :meth:`create` / :meth:`open`, not the constructor."""
 
+    _FORMAT = snapshots.Format(
+        "ImageHashStore", "image-hash-store", "n_images", "band", ("band", "bucket", "id", "h")
+    )
+
     def __init__(self, spark: SparkSession, root: str, manifest: dict):
         self.spark = spark
         self.root = root
         self.manifest = manifest
+        self._snaps = snapshots.Snapshots(spark, root, manifest, self._FORMAT)
 
     # -- lifecycle ---------------------------------------------------------
 
@@ -77,29 +68,12 @@ class ImageHashStore:
             raise ValueError("completeness requires max_hamming < bands (pigeonhole)")
         if 64 % bands != 0:
             raise ValueError(f"bands ({bands}) must divide 64")
-        if fs.exists(spark, fs.join(root, _MANIFEST)):
-            if not overwrite:
-                raise ValueError(f"ImageHashStore already exists at {root}")
-            fs.delete(spark, root)
-        fs.mkdirs(spark, root)
-        manifest = {
-            "format": "image-hash-store",
-            "version": 1,
-            "bands": int(bands),
-            "max_hamming": int(max_hamming),
-            "snapshots": [],
-            "n_images": 0,
-            "next_snap_id": 0,
-        }
-        fs.write_json(spark, fs.join(root, _MANIFEST), manifest)
-        return cls(spark, root, manifest)
+        params = {"bands": int(bands), "max_hamming": int(max_hamming)}
+        return cls(spark, root, snapshots.create_manifest(spark, root, cls._FORMAT, params, overwrite))
 
     @classmethod
     def open(cls, spark: SparkSession, root: str) -> "ImageHashStore":
-        manifest = fs.read_json(spark, fs.join(root, _MANIFEST))
-        if manifest.get("format") != "image-hash-store":
-            raise ValueError(f"not an ImageHashStore: {root}")
-        return cls(spark, root, manifest)
+        return cls(spark, root, snapshots.read_manifest(spark, root, cls._FORMAT))
 
     # -- hash plumbing -------------------------------------------------------
 
@@ -132,42 +106,14 @@ class ImageHashStore:
     ) -> DataFrame:
         """(band INT, bucket LONG, id, h LONG) rows for every image — the
         stored layout of :meth:`append_snapshot`."""
-        hashes = self._hashes(df, id_col, content_col, hash_col)
+        from ..operators.dedup import _chunk_keys
+
         bands = self.manifest["bands"]
-        width = 64 // bands
-        mask = F.lit((1 << width) - 1)
-        return hashes.select(
-            F.posexplode(
-                F.array(*[
-                    F.shiftrightunsigned(F.col("__h"), b * width).bitwiseAND(mask)
-                    for b in range(bands)
-                ])
-            ).alias("band", "bucket"),
+        return self._hashes(df, id_col, content_col, hash_col).select(
+            F.posexplode(F.array(*_chunk_keys("__h", bands, 64 // bands, 1))).alias("band", "bucket"),
             F.col("id"),
             F.col("__h").alias("h"),
         )
-
-    def _store_df(self) -> Optional[DataFrame]:
-        snaps = self.manifest["snapshots"]
-        key = tuple(s["dir"] for s in snaps if s.get("n_images") != 0)
-        if not key:
-            return None
-        # memoized lazy union on the immutable snapshot-dir tuple with
-        # append-only extension — same steady-state-loop discipline as the
-        # sibling stores
-        cached = getattr(self, "_store_df_memo", None)
-        if cached is not None and cached[0] == key:
-            return cached[1]
-        out, todo = None, key
-        if cached is not None and key[: len(cached[0])] == cached[0]:
-            out, todo = cached[1], key[len(cached[0]):]
-        for dirname in todo:
-            df = self.spark.read.parquet(fs.join(self.root, dirname)).select(
-                "band", "bucket", "id", "h", "snapshot"
-            )
-            out = df if out is None else out.unionByName(df)
-        self._store_df_memo = (key, out)
-        return out
 
     # -- operations --------------------------------------------------------
 
@@ -182,54 +128,11 @@ class ImageHashStore:
         """Hash ``df``'s images (or take ``hash_col`` verbatim) and commit
         them as ``snapshot`` (typically the batch's KEPT rows). Written
         partitioned by band; manifest overwrite is the atomic commit."""
-        if any(s["name"] == snapshot for s in self.manifest["snapshots"]):
-            raise ValueError(f"snapshot {snapshot!r} already in store")
-        dirname = fs.alloc_snap_dir(self.spark, self.root, self.manifest)
-        out = fs.join(self.root, dirname)
-        rows = self.band_rows(df, id_col, content_col, hash_col).withColumn(
-            "snapshot", F.lit(snapshot)
+        return self._snaps.commit(
+            snapshot,
+            self.band_rows(df, id_col, content_col, hash_col),
+            self.manifest["bands"],
         )
-        # image count folded into the write job (the MinHashStore
-        # discipline): band_rows emits exactly ``bands`` rows per input
-        # image, so rows/bands is the committed image count — no
-        # read-back action. Callers commit one row per image id (the
-        # recipes' kept frames / the streaming sink read-back).
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        rows = rows.observe(obs, F.count(F.lit(1)).alias("rows"))
-        # cluster by (band, id-hash) before the write (see MinHashStore:
-        # fewer small files per batch-scale snapshot via AQE coalescing,
-        # cluster-width spread for corpus-scale initial builds instead
-        # of the distinct-band task ceiling)
-        par = max(1, int(self.spark.sparkContext.defaultParallelism))
-        rows = rows.repartition(
-            F.col("band"), F.pmod(F.xxhash64(F.col("id")), F.lit(par))
-        )
-        rows.write.partitionBy("band").parquet(out, mode="overwrite")
-        try:
-            n = int(obs.get["rows"]) // int(self.manifest["bands"])
-        except Exception:
-            # an EMPTY batch: AQE's empty-relation propagation can
-            # eliminate the CollectMetrics node with the rest of the
-            # plan, so no metrics row exists — prove emptiness (or not)
-            # from the directory listing, as the pre-Observation code did
-            names = fs.listdir(self.spark, out)
-            has_data = any(
-                nm.startswith("band=")
-                or (nm.startswith("part-") and not nm.endswith(".crc"))
-                for nm in names
-            )
-            n = (
-                self.spark.read.parquet(out).select("id").distinct().count()
-                if has_data
-                else 0
-            )
-        entry = {"name": snapshot, "dir": dirname, "n_images": n}
-        self.manifest["snapshots"].append(entry)
-        self.manifest["n_images"] += n
-        fs.write_json(self.spark, fs.join(self.root, _MANIFEST), self.manifest)
-        return entry
 
     def match_against(
         self,
@@ -246,36 +149,20 @@ class ImageHashStore:
         a smaller per-call bound is allowed — still complete by
         pigeonhole; a larger one is rejected).
 
-        Round-11 shape (same discipline as
-        :func:`~duckdb_vss_spark.operators.dedup.hamming_pairs`, which
-        round 10's steady-state measurement showed this path needed too —
-        at 20k stored hashes every 4-bit bucket went hot and the old
-        store+batch cap silently dropped EVERY match):
-
-        - **exact matches bypass banding entirely** — a batch hash equal
-          to a stored hash is found by an equi-join on the hash value,
-          immune to any cap;
-        - the band join runs over DISTINCT hash values per side, with the
-          arity auto-escalated to pair-of-chunk keys when the single-chunk
-          key space saturates ``max_bucket`` (complete while
-          ``max_hamming <= bands - combo``);
-        - hot (band, bucket)s of distinct hashes are still capped — viral
-          boilerplate stays bounded — but any drop now emits a
-          ``RuntimeWarning`` with the dropped fraction (no silent caps).
+        Exact matches bypass banding via an equi-join on the hash value
+        (immune to any cap); near matches run the distinct-hash band join
+        of :func:`~duckdb_vss_spark.operators.dedup._near_hash_pairs`.
         """
         bands = self.manifest["bands"]
-        width = 64 // bands
         bound = self.manifest["max_hamming"] if max_hamming is None else int(max_hamming)
         if bound >= bands:
             raise ValueError(
                 f"max_hamming ({bound}) must stay below the store's bands ({bands})"
             )
-        store = self._store_df()
+        store = self._snaps.store_df()
         if store is None:
-            id_t = dict(df.dtypes)[id_col]
-            schema = f"id {id_t}, store_id {id_t}, snapshot string, hamming int"
-            return self.spark.createDataFrame([], schema)
-        from ..operators.dedup import _auto_banding, _chunk_keys, _shared
+            return self._snaps.no_matches(dict(df.dtypes)[id_col], "hamming int")
+        from ..operators.dedup import _near_hash_pairs, _shared
 
         bh = _shared(self._hashes(df, id_col, content_col, hash_col))
         sh = store.select(
@@ -286,67 +173,10 @@ class ImageHashStore:
         )
         if bound == 0:
             return exact
-        from ..operators.dedup import _escalate_banding
-
-        bd = _shared(bh.select("__h").distinct().withColumnRenamed("__h", "h"))
-        sd = _shared(sh.select("h").distinct())
-        nd = bd.count() + sd.count()
-        # cheapest complete banding for THIS call's bound (may re-band to
-        # wider chunks — see _auto_banding; the stored band/bucket layout
-        # is irrelevant here because `h` rides every row)
-        bands_eff, combo = _auto_banding(64, bound, nd, max_bucket)
-
-        def band(dfh, keys):
-            return dfh.select("h", F.posexplode(F.array(*keys)).alias("b", "bucket"))
-
-        keys = _chunk_keys("h", bands_eff, 64 // bands_eff, combo)
-        bb, sb = band(bd, keys), band(sd, keys)
-        if nd > max_bucket:
-            from ..operators.dedup import _banded_hot_stats
-
-            sizes, hot = _banded_hot_stats(bb.unionByName(sb), max_bucket)
-            if hot["hb"] > 0:
-                # observed skew beat the average-load choice: escalate
-                # ONCE to packed pair keys over the same chunks before
-                # accepting any drop — loss-monotone (see
-                # _escalate_banding); diverse hot-bucket members spread
-                # cold under the pair key (the round-12 image-text loop
-                # measured exactly this: 135k+ distinct pHashes,
-                # unsaturated by the average, a few skewed buckets over
-                # the cap)
-                esc = _escalate_banding(64, bound, bands_eff, combo)
-                if esc is not None:
-                    bands_eff, combo = esc
-                    keys = _chunk_keys("h", bands_eff, 64 // bands_eff, combo)
-                    bb, sb = band(bd, keys), band(sd, keys)
-                    sizes, hot = _banded_hot_stats(bb.unionByName(sb), max_bucket)
-            if hot["hb"] > 0:
-                import warnings
-
-                total = nd * len(keys)
-                warnings.warn(
-                    f"ImageHashStore.match_against: {hot['hb']} hot (band, "
-                    f"bucket) groups over max_bucket={max_bucket} dropped "
-                    f"{hot['hr']}/{total} banded rows "
-                    f"({hot['hr'] / total:.1%}) at the final banding "
-                    f"({bands_eff} bands, combo={combo}); near-matches "
-                    f"(hamming >= 1) whose every agreeing chunk is hot "
-                    f"are lost — exact matches are unaffected. Raise "
-                    f"max_bucket.",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-                ok = sizes.filter(F.col("__n") <= max_bucket).select("b", "bucket")
-                bb, sb = bb.join(ok, ["b", "bucket"]), sb.join(ok, ["b", "bucket"])
-        near_h = (
-            bb.join(sb.withColumnRenamed("h", "hs"), ["b", "bucket"])
-            .select(F.col("h").alias("hb"), "hs")
-            .withColumn(
-                "hamming",
-                F.bit_count(F.col("hb").bitwiseXOR(F.col("hs"))).cast("int"),
-            )
-            .filter((F.col("hamming") >= 1) & (F.col("hamming") <= bound))
-            .dropDuplicates(["hb", "hs"])
+        near_h = _near_hash_pairs(
+            _shared(bh.select("__h").distinct().withColumnRenamed("__h", "h")),
+            _shared(sh.select("h").distinct()),
+            bound, max_bucket, "ImageHashStore.match_against", "matches",
         )
         near = (
             near_h.join(bh.withColumnRenamed("__h", "hb"), "hb")
@@ -366,38 +196,17 @@ class ImageHashStore:
     ) -> DataFrame:
         """``df`` plus boolean ``flag_col``: True when the image near-dups
         ANY stored image (flag-don't-drop)."""
-        hits = (
-            self.match_against(df, id_col, content_col, hash_col, max_hamming)
-            .select(F.col("id").alias("__mid"))
-            .distinct()
-        )
-        return (
-            df.join(hits, F.col(id_col) == F.col("__mid"), "left")
-            .withColumn(flag_col, F.col("__mid").isNotNull())
-            .drop("__mid")
+        return snapshots.flag_rows(
+            df, id_col, self.match_against(df, id_col, content_col, hash_col, max_hamming), flag_col
         )
 
     def drop_snapshot(self, snapshot: str) -> None:
-        """Retire a snapshot: manifest overwrite commits; the data dir
-        becomes a vacuum-able orphan (its name is never reallocated)."""
-        snaps = self.manifest["snapshots"]
-        entry = next((s for s in snaps if s["name"] == snapshot), None)
-        if entry is None:
-            raise ValueError(f"snapshot {snapshot!r} not in store")
-        self.manifest["snapshots"] = [s for s in snaps if s["name"] != snapshot]
-        self.manifest["n_images"] -= entry["n_images"]
-        fs.write_json(self.spark, fs.join(self.root, _MANIFEST), self.manifest)
+        """Retire a snapshot; :meth:`vacuum` reclaims its data dir."""
+        self._snaps.drop(snapshot)
 
     def vacuum(self) -> list:
         """Delete data dirs not referenced by the manifest."""
-        live = {s["dir"] for s in self.manifest["snapshots"]}
-        deleted = []
-        for name in fs.listdir(self.spark, self.root):
-            base = name.rstrip("/").split("/")[-1]
-            if base.startswith("snap-") and base not in live:
-                fs.delete(self.spark, fs.join(self.root, base))
-                deleted.append(base)
-        return deleted
+        return self._snaps.vacuum()
 
     def info(self) -> dict:
         """Manifest snapshot (copy) for pragma-style introspection."""

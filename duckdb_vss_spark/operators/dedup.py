@@ -693,6 +693,59 @@ def _banded_hot_stats(banded_union: DataFrame, max_bucket: int):
     return sizes, row
 
 
+def _near_hash_pairs(
+    bd: DataFrame, sd: DataFrame, bound: int, max_bucket: int, who: str, what: str
+) -> DataFrame:
+    """The banded-Hamming NEAR join of the store matchers: ``(hb, hs,
+    hamming)`` for every batch hash of ``bd`` and stored hash of ``sd`` at
+    ``1 <= hamming <= bound``. Both are DISTINCT 64-bit ``h`` tables, so
+    duplicates never crowd a bucket (callers equi-join exact matches).
+    Banding is :func:`_auto_banding`'s pick; when the distinct count can
+    overflow a bucket, a hot pass escalates ONCE (:func:`_escalate_banding`,
+    loss-monotone), and buckets still hot are dropped with a
+    ``RuntimeWarning`` naming ``who`` and the lost near ``what``."""
+    nd = bd.count() + sd.count()
+    bands, combo = _auto_banding(64, bound, nd, max_bucket)
+
+    def band(dfh, keys):
+        return dfh.select("h", F.posexplode(F.array(*keys)).alias("b", "bucket"))
+
+    keys = _chunk_keys("h", bands, 64 // bands, combo)
+    bb, sb = band(bd, keys), band(sd, keys)
+    if nd > max_bucket:
+        sizes, hot = _banded_hot_stats(bb.unionByName(sb), max_bucket)
+        if hot["hb"] > 0:
+            esc = _escalate_banding(64, bound, bands, combo)
+            if esc is not None:
+                bands, combo = esc
+                keys = _chunk_keys("h", bands, 64 // bands, combo)
+                bb, sb = band(bd, keys), band(sd, keys)
+                sizes, hot = _banded_hot_stats(bb.unionByName(sb), max_bucket)
+        if hot["hb"] > 0:
+            import warnings
+
+            total = nd * len(keys)
+            warnings.warn(
+                f"{who}: {hot['hb']} hot (band, bucket) groups over "
+                f"max_bucket={max_bucket} dropped {hot['hr']}/{total} banded "
+                f"rows ({hot['hr'] / total:.1%}) at the final banding "
+                f"({bands} bands, combo={combo}); near {what} (hamming >= 1) "
+                f"whose every agreeing chunk is hot are lost — exact matches "
+                f"are unaffected. Raise max_bucket.",
+                RuntimeWarning,
+                stacklevel=3,
+            )
+            ok = sizes.filter(F.col("__n") <= max_bucket).select("b", "bucket")
+            bb, sb = bb.join(ok, ["b", "bucket"]), sb.join(ok, ["b", "bucket"])
+    return (
+        bb.join(sb.withColumnRenamed("h", "hs"), ["b", "bucket"])
+        .select(F.col("h").alias("hb"), "hs")
+        .withColumn("hamming", F.bit_count(F.col("hb").bitwiseXOR(F.col("hs"))).cast("int"))
+        .filter((F.col("hamming") >= 1) & (F.col("hamming") <= bound))
+        .dropDuplicates(["hb", "hs"])
+    )
+
+
 def _chunk_keys(hcol, bands: int, width: int, combo: int) -> list:
     """Banded join-key expressions for a hash column split into ``bands``
     chunks of ``width`` bits: ``combo=1`` → the chunk values themselves;

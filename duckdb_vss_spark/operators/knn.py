@@ -924,10 +924,11 @@ def match_from_flat(flat: DataFrame, left: DataFrame, right: DataFrame, left_id:
     matched = flat.join(rstruct, flat["rid"] == rstruct["__rid"]).select(
         "qid", "rnk", F.struct(F.col("score").cast("float").alias("score"), F.col("row").alias("row")).alias("m")
     )
-    per_q = matched.groupBy("qid").agg(
+    # the join key is private: a caller's own ``qid`` column survives
+    per_q = matched.groupBy(F.col("qid").alias("__mqid")).agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct(F.col("rnk").alias("k"), F.col("m").alias("m")))),
             lambda e: e["m"],
         ).alias("matches")
     )
-    return left.join(per_q, left[left_id] == per_q["qid"], "left").drop("qid")
+    return left.join(per_q, left[left_id] == per_q["__mqid"], "left").drop("__mqid")

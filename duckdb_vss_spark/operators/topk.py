@@ -180,7 +180,9 @@ def topk(
     Returns ``df``'s columns plus ``score_col``. ``tiebreak`` (a column name)
     makes results deterministic under score ties — recommended for any
     correctness harness; the reference's own tests sidestep ties with seeded
-    data (reference: test/sql/hnsw/hnsw_lateral_join_group.test:8).
+    data (reference: test/sql/hnsw/hnsw_lateral_join_group.test:8). Without
+    it the multiset of scores returned is fixed, but WHICH of several rows
+    tied at the k-th score are returned depends on the partitioning.
 
     ``method`` selects the candidate strategy — every one finishes with the
     same authoritative JVM exact score + order, so outputs are bit-identical:
@@ -276,7 +278,10 @@ def _by_k(df, value_col, score: Column, k: int, descending: bool, tiebreak, filt
         )
         order.append(F.col("__t"))
     else:
+        # no tiebreak: the value itself breaks score ties, the same order
+        # the output is sorted by below, so the pick is partition-independent
         scored = df.select(value_col.alias("__v"), score.alias("__s"))
+        order.append(F.col("__v"))
     head = scored.orderBy(*order).limit(k).filter(F.col("__s").isNotNull())
     # k rows left: sort-in-aggregate is O(k log k) on a single tiny group.
     sort_key = F.struct(
@@ -380,10 +385,19 @@ def grouped_topk(
 def min_by_k(df, value_col, score: Column, k: int, tiebreak=None, filter=None) -> DataFrame:
     """DuckDB ``min_by(value, score, k) [FILTER (WHERE ...)]``: single-row
     DataFrame with column ``values`` = the k values with the smallest scores,
-    ascending; ``filter`` restricts the aggregate's input rows."""
+    ascending; ``filter`` restricts the aggregate's input rows.
+
+    Ties: rows with equal scores are ordered by ``tiebreak`` when given,
+    otherwise by the value itself (ascending, Spark's ordering of the
+    value's type; arrays compare element by element). That is the order of
+    ``values`` too, so the k picked never depend on how ``df`` is
+    partitioned and ``min_by_k(k)`` is a prefix of ``min_by_k(k + 1)``.
+    Around [5,5,5] on the 9x9x9 grid, for example, the two distance-1 picks
+    are [4,5,5] and [5,4,5]."""
     return _by_k(df, value_col, score, k, descending=False, tiebreak=tiebreak, filter=filter)
 
 
 def max_by_k(df, value_col, score: Column, k: int, tiebreak=None, filter=None) -> DataFrame:
-    """DuckDB ``max_by(value, score, k) [FILTER (WHERE ...)]`` (descending)."""
+    """DuckDB ``max_by(value, score, k) [FILTER (WHERE ...)]`` (descending;
+    score ties resolve as in :func:`min_by_k`, smaller values first)."""
     return _by_k(df, value_col, score, k, descending=True, tiebreak=tiebreak, filter=filter)

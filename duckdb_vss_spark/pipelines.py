@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .functions import text as T
+from .index.snapshots import flag_rows
 
 __all__ = [
     "ccnet_curate",
@@ -292,18 +293,10 @@ def audio_curate(
     )
     keep = F.col("quality_keep") & F.col("dedup_keep")
     if store is not None:
-        hits = (
-            store.match_against(
-                clips.select(id_col, content_col), content_col, id_col, min_matches
-            )
-            .select(F.col("id").alias("__mid"))
-            .distinct()
+        matches = store.match_against(
+            clips.select(id_col, content_col), content_col, id_col, min_matches
         )
-        out = (
-            out.join(hits, F.col(id_col) == F.col("__mid"), "left")
-            .withColumn("dup_of_store", F.col("__mid").isNotNull())
-            .drop("__mid")
-        )
+        out = flag_rows(out, id_col, matches, "dup_of_store")
         keep = keep & ~F.col("dup_of_store")
     out = out.withColumn("audio_keep", keep)
     if store is not None and snapshot is not None:
@@ -448,22 +441,14 @@ def image_curate(
     )
     keep = F.col("quality_keep") & F.col("dedup_keep")
     if store is not None:
-        hits = (
-            # the recipe's threshold governs BOTH the in-batch join and
-            # the history match (a smaller per-call bound than the
-            # store's configured one is always pigeonhole-complete)
-            store.match_against(
-                hashes, id_col, hash_col="phash",
-                max_hamming=max_hamming, max_bucket=max_bucket,
-            )
-            .select(F.col("id").alias("__mid"))
-            .distinct()
+        # the recipe's threshold governs BOTH the in-batch join and the
+        # history match (a smaller per-call bound than the store's
+        # configured one is always pigeonhole-complete)
+        matches = store.match_against(
+            hashes, id_col, hash_col="phash",
+            max_hamming=max_hamming, max_bucket=max_bucket,
         )
-        out = (
-            out.join(hits, F.col(id_col) == F.col("__mid"), "left")
-            .withColumn("dup_of_store", F.col("__mid").isNotNull())
-            .drop("__mid")
-        )
+        out = flag_rows(out, id_col, matches, "dup_of_store")
         keep = keep & ~F.col("dup_of_store")
     out = out.withColumn("image_keep", keep)
     if store is not None and snapshot is not None:
@@ -608,19 +593,11 @@ def video_curate(
     ).withColumnRenamed("is_canonical", "dedup_keep")
     keep = F.col("quality_keep") & F.col("dedup_keep")
     if store is not None:
-        hits = (
-            store.match_against(
-                None, id_col, keys_df=keys, min_matches=min_matches,
-                max_hamming=max_hamming, max_bucket=max_bucket,
-            )
-            .select(F.col("id").alias("__mid"))
-            .distinct()
+        matches = store.match_against(
+            None, id_col, keys_df=keys, min_matches=min_matches,
+            max_hamming=max_hamming, max_bucket=max_bucket,
         )
-        out = (
-            out.join(hits, F.col(id_col) == F.col("__mid"), "left")
-            .withColumn("dup_of_store", F.col("__mid").isNotNull())
-            .drop("__mid")
-        )
+        out = flag_rows(out, id_col, matches, "dup_of_store")
         keep = keep & ~F.col("dup_of_store")
     out = out.withColumn("video_keep", keep)
     if store is not None and snapshot is not None:
@@ -964,6 +941,38 @@ def semantic_curate(
     )
 
 
+def _warc_docs(
+    recs: DataFrame,
+    min_status: int,
+    max_status: int,
+    html_only: bool,
+    main_content: bool,
+    encoding: str,
+) -> DataFrame:
+    """HTTP response records -> ``(doc_id, url, title, text, ...)``
+    documents: the status/content-type gate and HTML text extraction of
+    :func:`warc_ingest` and its streaming twin, which must extract
+    identical text (a page kept by a batch run must near-dup against a
+    later streaming run's fingerprints)."""
+    from .functions.text import hash64
+    from .operators.web import extract_html_text, extract_main_content
+
+    ok = recs.filter(
+        (F.col("http_status") >= min_status) & (F.col("http_status") <= max_status)
+    )
+    if html_only:
+        ok = ok.filter(F.lower(F.coalesce("http_content_type", F.lit(""))).contains("html"))
+    ok = ok.withColumn("doc_id", hash64(F.concat(F.lit("warc:"), F.col("record_id"))))
+    # url rides THROUGH the extraction projection (carry_cols) — a
+    # doc_id self-join here would re-run the segment parse on both sides
+    # and add an exchange
+    extractor = extract_main_content if main_content else extract_html_text
+    return extractor(
+        ok.select("doc_id", "url", "body"), "body", "doc_id",
+        encoding=encoding, carry_cols=("url",),
+    )
+
+
 def warc_ingest(
     spark,
     warc_path: str,
@@ -993,24 +1002,10 @@ def warc_ingest(
     :func:`~duckdb_vss_spark.operators.web.extract_main_content`;
     ``encoding`` defaults to per-doc charset sniffing.
     """
-    from .functions.text import hash64
-    from .operators.web import extract_html_text, extract_main_content
     from .sources.warc import read_warc
 
-    recs = read_warc(spark, warc_path)
-    ok = recs.filter(
-        (F.col("http_status") >= min_status) & (F.col("http_status") <= max_status)
-    )
-    if html_only:
-        ok = ok.filter(F.lower(F.coalesce("http_content_type", F.lit(""))).contains("html"))
-    ok = ok.withColumn("doc_id", hash64(F.concat(F.lit("warc:"), F.col("record_id"))))
-    # url rides THROUGH the extraction projection (carry_cols) — a
-    # doc_id self-join here would re-run the segment parse on both sides
-    # and add an exchange
-    extractor = extract_main_content if main_content else extract_html_text
-    docs = extractor(
-        ok.select("doc_id", "url", "body"), "body", "doc_id",
-        encoding=encoding, carry_cols=("url",),
+    docs = _warc_docs(
+        read_warc(spark, warc_path), min_status, max_status, html_only, main_content, encoding
     )
     return crawl_ingest(docs, store, url_col="url", text_col="text", id_col="doc_id", **crawl_kwargs)
 

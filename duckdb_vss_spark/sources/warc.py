@@ -129,9 +129,15 @@ def read_warc(
     One file = one task (``binaryFile`` source); records are parsed
     executor-side in an Arrow-batched ``mapInPandas`` and never shuffle.
     """
+    return _warc_records(spark.read.format("binaryFile").load(path), record_types)
+
+
+def _warc_records(files: DataFrame, record_types: tuple = ("response",)) -> DataFrame:
+    """:func:`read_warc`'s records from a ``binaryFile``-shaped
+    ``(path, content, ...)`` frame — a batch read or one micro-batch of
+    a file-source stream."""
     import pandas as pd
 
-    files = spark.read.format("binaryFile").load(path).select("path", "content")
     want = tuple(record_types)
 
     def gen(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
@@ -147,4 +153,4 @@ def read_warc(
                 if recs:
                     yield pd.DataFrame(recs, columns=cols)
 
-    return files.mapInPandas(gen, schema=_SCHEMA)
+    return files.select("path", "content").mapInPandas(gen, schema=_SCHEMA)

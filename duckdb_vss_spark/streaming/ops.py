@@ -22,7 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructType
 
 __all__ = [
     "events_schema",
@@ -252,6 +251,19 @@ def _drain(q, timeout_sec: float, name: str) -> None:
     q.awaitTermination()
 
 
+def _run_foreach(src: DataFrame, fn, checkpoint: str, timeout_sec: float, name: str) -> None:
+    """Run ``fn(batch_df, batch_id)`` over every micro-batch of ``src``
+    currently available (``availableNow``), checkpointed at
+    ``checkpoint``, and block until the stream drains."""
+    q = (
+        src.writeStream.foreachBatch(fn)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+    _drain(q, timeout_sec, name)
+
+
 def stream_knn_join(
     probes: DataFrame,
     index,
@@ -283,13 +295,7 @@ def stream_knn_join(
         out = knn_join_flat_indexed(bdf, index, vec_col, k, id_col, ef_search)
         out.write.mode("append").parquet(out_path)
 
-    q = (
-        probes.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", out_path + ".ckpt")
-        .start()
-    )
-    _drain(q, timeout_sec, "stream_knn_join")
+    _run_foreach(probes, _batch, out_path + ".ckpt", timeout_sec, "stream_knn_join")
     return spark.read.parquet(out_path)
 
 
@@ -364,55 +370,113 @@ def stream_index_insert(
                 # this closure all keep working across the fold
                 index.__dict__.update(rebuilt.__dict__)
 
-    q = (
-        vectors.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-    _drain(q, timeout_sec, "stream_index_insert")
+    _run_foreach(vectors, _batch, checkpoint, timeout_sec, "stream_index_insert")
 
 
-def _crawl_ingest_batch(
+def _store_batch(
     bdf: DataFrame,
     bid: int,
     store,
     out_path: str,
-    url_col: str,
-    text_col: str,
-    id_col: str,
     snapshot_prefix: str,
-    **ingest_kwargs,
+    recipe,
+    keep_col: str,
+    commit,
 ) -> None:
-    """One micro-batch of :func:`stream_crawl_ingest`, idempotent under
-    replay. Two guards make the replay a no-op rather than a recompute:
+    """One micro-batch of a store stream, idempotent under replay.
 
-    - If this batch's snapshot name is ALREADY in the store, the whole
-      batch is skipped. Re-running the flags would be wrong, not just
-      wasteful: flag_batch would match the batch's docs against their own
-      committed fingerprints (est_jaccard 1.0), flip every kept row to
-      dup_of_store, and the sink overwrite would replace the correct
-      first-attempt output with an all-dup version. The sink write
-      precedes the snapshot commit, so a committed snapshot implies the
-      sink subdirectory is already complete.
-    - The sink write targets a batch-id-keyed subdirectory with
-      ``overwrite``, so a replay that DOES recompute (crash before the
-      snapshot committed — the store holds no trace of this batch yet,
-      flags recompute identically) replaces rather than duplicates."""
-    from ..pipelines import crawl_ingest
+    ``recipe(bdf, held)`` returns the flagged rows, which land in the sink
+    ``out_path/batch=NNNNNN/``; ``commit(kept, name)`` then commits the
+    ``keep_col`` rows, read back from that sink (the recipe never runs
+    twice), as snapshot ``{snapshot_prefix}-NNNNNN``. Frames the recipe
+    appends to ``held`` are released when the batch ends, so a long stream
+    does not accumulate one cached frame per batch.
+
+    A replay is a no-op, not a recompute: a batch whose snapshot is
+    already committed is skipped (re-flagging it would match its own
+    fingerprints and overwrite the sink with an all-dup version; the sink
+    write precedes the commit, so a committed snapshot implies a complete
+    sink). A replay after a crash before the commit recomputes identical
+    flags and overwrites its own batch directory rather than appending a
+    duplicate — ``foreachBatch`` writes get no exactly-once help from the
+    checkpoint. Readers see ``batch`` as an ordinary partition column.
+    """
+    from ..broadcasts import untrack_persist
 
     name = f"{snapshot_prefix}-{bid:06d}"
     if any(s["name"] == name for s in store.manifest["snapshots"]):
-        return  # replayed after full commit: sink + store already hold batch
-    out = crawl_ingest(
-        bdf, store, url_col=url_col, text_col=text_col, id_col=id_col,
-        append_snapshot=None, **ingest_kwargs,
-    )
-    out.write.mode("overwrite").parquet(f"{out_path}/batch={bid:06d}")
-    store.append_snapshot(
-        out.filter("ingest_keep").select(id_col, text_col),
-        text_col, id_col, name,
-    )
+        return
+    held: list = []
+    try:
+        out = recipe(bdf, held)
+        sink = f"{out_path}/batch={bid:06d}"
+        out.write.mode("overwrite").parquet(sink)
+        commit(bdf.sparkSession.read.parquet(sink).filter(keep_col), name)
+    finally:
+        for cached in held:
+            untrack_persist(cached)
+
+
+def _store_stream(
+    src: DataFrame,
+    store,
+    out_path: str,
+    checkpoint: str,
+    timeout_sec: float,
+    name: str,
+    snapshot_prefix: str,
+    recipe_kwargs: dict,
+    recipe,
+    keep_col: str,
+    commit,
+) -> None:
+    """Run a store stream: every micro-batch of ``src`` goes through
+    :func:`_store_batch`, one committed snapshot per batch. The stream
+    owns snapshot naming and the store, so ``recipe_kwargs`` may not carry
+    ``snapshot`` or ``store``: a caller-fixed snapshot name would commit a
+    second, identically-named snapshot every micro-batch that the
+    ``{prefix}-{batch_id}`` replay guard cannot see, so a restarted batch
+    would re-dedup against its own fingerprints."""
+    forbidden = {"snapshot", "store"} & recipe_kwargs.keys()
+    if forbidden:
+        raise ValueError(
+            f"{name} owns snapshot naming and the store; "
+            f"pass {sorted(forbidden)} as direct arguments, not as recipe keyword arguments"
+        )
+
+    def _batch(bdf: DataFrame, bid: int) -> None:
+        _store_batch(bdf, bid, store, out_path, snapshot_prefix, recipe, keep_col, commit)
+
+    _run_foreach(src, _batch, checkpoint, timeout_sec, name)
+
+
+def _crawl_hooks(store, url_col: str, text_col: str, id_col: str, ingest_kwargs: dict):
+    """``(recipe, keep_col, commit)`` of the crawl-ingest store stream,
+    shared by :func:`stream_crawl_ingest` and :func:`stream_warc_ingest`."""
+    from ..pipelines import crawl_ingest
+
+    def recipe(bdf: DataFrame, held: list) -> DataFrame:
+        return crawl_ingest(
+            bdf, store, url_col=url_col, text_col=text_col, id_col=id_col,
+            append_snapshot=None, **ingest_kwargs,
+        )
+
+    def commit(kept: DataFrame, name: str) -> None:
+        store.append_snapshot(kept.select(id_col, text_col), text_col, id_col, name)
+
+    return recipe, "ingest_keep", commit
+
+
+def _curate_recipe(curate_fn, store, **kwargs):
+    """The ``recipe`` of a modality store stream: ``curate_fn`` over the
+    fanned-out micro-batch, matching ``store`` without committing (the
+    stream commits after the sink write)."""
+    from ..operators.dedup import _fan_out
+
+    def recipe(bdf: DataFrame, held: list) -> DataFrame:
+        return curate_fn(_fan_out(bdf), store=store, snapshot=None, **kwargs)
+
+    return recipe
 
 
 def stream_crawl_ingest(
@@ -438,89 +502,15 @@ def stream_crawl_ingest(
     mutates a persisted store through its batch API, one committed
     snapshot per micro-batch.
 
-    Delivery: effectively-once. A replayed uncommitted micro-batch re-runs
-    the whole flag+append; the snapshot-name collision guard makes the
-    replayed append a no-op-with-error, which we swallow — the store then
-    holds the FIRST attempt's fingerprints. The sink write is made
-    idempotent the same way: each micro-batch lands in its own
-    ``out_path/batch=NNNNNN/`` subdirectory with ``mode("overwrite")``
-    (foreachBatch manual writes get no exactly-once help from the
-    checkpoint, so a plain ``mode("append")`` would duplicate the batch's
-    rows on replay). Readers see ``batch`` as an ordinary partition column
-    of ``spark.read.parquet(out_path)``.
+    Delivery is effectively-once through the replay guards of
+    :func:`_store_batch` (committed-snapshot skip + batch-keyed overwrite
+    sink ``out_path/batch=NNNNNN/``).
     """
-    def _batch(bdf: DataFrame, bid: int) -> None:
-        _crawl_ingest_batch(
-            bdf, bid, store, out_path,
-            url_col=url_col, text_col=text_col, id_col=id_col,
-            snapshot_prefix=snapshot_prefix, **ingest_kwargs,
-        )
-
-    q = (
-        docs.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    _store_stream(
+        docs, store, out_path, checkpoint, timeout_sec, "stream_crawl_ingest",
+        snapshot_prefix, ingest_kwargs,
+        *_crawl_hooks(store, url_col, text_col, id_col, ingest_kwargs),
     )
-    _drain(q, timeout_sec, "stream_crawl_ingest")
-
-
-def _curate_batch(
-    bdf: DataFrame,
-    bid: int,
-    store,
-    bench,
-    out_path: str,
-    text_col: str,
-    id_col: str,
-    snapshot_prefix: str,
-    **curate_kwargs,
-) -> None:
-    """One micro-batch of :func:`stream_curate`. Same replay discipline as
-    :func:`_crawl_ingest_batch`: a committed snapshot means sink + store
-    already hold this batch (skip — re-flagging would match the batch
-    against its own fingerprints); the sink write is batch-keyed with
-    overwrite and PRECEDES the snapshot commit. The recipe's persisted
-    narrow flag frame is unpersisted once the batch is fully
-    materialized, so a long-running stream does not accumulate one
-    cached frame per micro-batch."""
-    from ..operators.dedup import _fan_out
-    from ..pipelines import curate_corpus
-
-    name = f"{snapshot_prefix}-{bid:06d}"
-    if any(s["name"] == name for s in store.manifest["snapshots"]):
-        return
-    # a micro-batch inherits the arrival files' partition count — a
-    # narrow drop (1-4 files) would run the recipe's map-only stages at
-    # file width while the cluster idles (measured: the MinHash stage
-    # re-fans itself, the classifier/decontam stages do not); doc-level
-    # rows are cheap to shuffle relative to anything derived from them
-    out = curate_corpus(
-        _fan_out(bdf), store=store, bench=bench, text_col=text_col,
-        id_col=id_col, **curate_kwargs,
-    )
-    sink = f"{out_path}/batch={bid:06d}"
-    out.write.mode("overwrite").parquet(sink)
-    # the snapshot commit fingerprints the KEPT rows — read them back from
-    # the sink just written instead of re-evaluating the recipe chain
-    # (round 9: the write already materialized every flag; re-running
-    # `out` here paid the classifier + store join + decontam a second
-    # time per batch)
-    kept = (
-        bdf.sparkSession.read.parquet(sink)
-        .filter("curate_keep")
-        .select(id_col, text_col)
-    )
-    store.append_snapshot(kept, text_col, id_col, name)
-    # unpersist AND vacate the tracked-ring slot, so a long stream's
-    # per-batch frames (the narrow flag frame and the store-match hit
-    # set) don't evict ring entries still in use
-    for attr in ("_curate_narrow", "_curate_hits"):
-        cached = getattr(out, attr, None)
-        if cached is not None:
-            from ..broadcasts import untrack_persist
-
-            untrack_persist(cached)
 
 
 def stream_curate(
@@ -547,22 +537,16 @@ def stream_curate(
     mixing race's population — the same per-dump semantics the batch
     recipe has when invoked per crawl snapshot); cross-batch state is
     exactly the MinHashStore's fingerprints, O(kept docs), never text.
-    Delivery is effectively-once via the same two guards as
-    :func:`stream_crawl_ingest` (snapshot-name skip + batch-keyed
-    overwrite sink). ``curate_kwargs`` pass through to the recipe
+    Delivery is effectively-once via the replay guards of
+    :func:`_store_batch`. ``curate_kwargs`` pass through to the recipe
     (``strata_col``, ``alpha``, ``pack_budget``, thresholds...) — except
-    ``snapshot`` and ``store``, which the stream owns: a caller-fixed
-    snapshot name would commit a second, identically-named snapshot every
-    micro-batch that the ``{prefix}-{batch_id}`` replay guard cannot see,
-    so a restarted batch would re-dedup against its own fingerprints and
-    break the effectively-once contract.
+    ``snapshot`` and ``store``, which the stream owns
+    (:func:`_store_stream`). The recipe's persisted narrow flag frame and
+    store-match hit set are released once each batch is committed.
     """
-    forbidden = {"snapshot", "store"} & curate_kwargs.keys()
-    if forbidden:
-        raise ValueError(
-            f"stream_curate owns snapshot naming and the store; "
-            f"pass {sorted(forbidden)} as direct arguments, not via curate_kwargs"
-        )
+    from ..operators.dedup import _fan_out
+    from ..pipelines import curate_corpus
+
     # the benchmark gram set is stream-invariant: build + persist it ONCE
     # and hand it to every micro-batch, instead of re-running the
     # benchmark explode+distinct per batch (round 9 overhead cut).
@@ -588,59 +572,32 @@ def stream_curate(
         )
         curate_kwargs["bench_grams"] = owned_grams
 
-    def _batch(bdf: DataFrame, bid: int) -> None:
-        _curate_batch(
-            bdf, bid, store, bench, out_path,
-            text_col=text_col, id_col=id_col,
-            snapshot_prefix=snapshot_prefix, **curate_kwargs,
+    def recipe(bdf: DataFrame, held: list) -> DataFrame:
+        # a micro-batch inherits the arrival files' partition count — a
+        # narrow drop (1-4 files) would run the recipe's map-only stages
+        # at file width while the cluster idles; doc-level rows are cheap
+        # to shuffle relative to anything derived from them
+        out = curate_corpus(
+            _fan_out(bdf), store=store, bench=bench, text_col=text_col,
+            id_col=id_col, **curate_kwargs,
         )
+        held.extend(
+            c for c in (getattr(out, "_curate_narrow", None), getattr(out, "_curate_hits", None))
+            if c is not None
+        )
+        return out
+
+    def commit(kept: DataFrame, name: str) -> None:
+        store.append_snapshot(kept.select(id_col, text_col), text_col, id_col, name)
 
     try:
-        q = (
-            docs.writeStream.foreachBatch(_batch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", checkpoint)
-            .start()
+        _store_stream(
+            docs, store, out_path, checkpoint, timeout_sec, "stream_curate",
+            snapshot_prefix, curate_kwargs, recipe, "curate_keep", commit,
         )
-        _drain(q, timeout_sec, "stream_curate")
     finally:
         if owned_grams is not None:
             owned_grams.unpersist()
-
-
-def _audio_curate_batch(
-    bdf: DataFrame,
-    bid: int,
-    store,
-    out_path: str,
-    content_col: str,
-    id_col: str,
-    snapshot_prefix: str,
-    **curate_kwargs,
-) -> None:
-    """One micro-batch of :func:`stream_audio_curate` — the same replay
-    discipline as :func:`_curate_batch`: committed snapshot ⇒ skip;
-    batch-keyed overwrite sink PRECEDES the snapshot commit; kept rows
-    are read back from the sink just written rather than re-running the
-    decode/fingerprint chain."""
-    from ..operators.dedup import _fan_out
-    from ..pipelines import audio_curate
-
-    name = f"{snapshot_prefix}-{bid:06d}"
-    if any(s["name"] == name for s in store.manifest["snapshots"]):
-        return
-    out = audio_curate(
-        _fan_out(bdf), content_col=content_col, id_col=id_col,
-        store=store, snapshot=None, **curate_kwargs,
-    )
-    sink = f"{out_path}/batch={bid:06d}"
-    out.write.mode("overwrite").parquet(sink)
-    kept = (
-        bdf.sparkSession.read.parquet(sink)
-        .filter("audio_keep")
-        .select(id_col, content_col)
-    )
-    store.append_snapshot(kept, content_col, id_col, name)
 
 
 def stream_audio_curate(
@@ -662,67 +619,22 @@ def stream_audio_curate(
     fingerprints as snapshot ``{prefix}-{batch_id}`` so the NEXT
     micro-batch dedups against it. Cross-batch state is the
     :class:`~duckdb_vss_spark.index.audio_store.AudioFingerprintStore`'s
-    key rows — O(kept clips' frames), never audio bytes. Delivery is
-    effectively-once via the snapshot-name skip + batch-keyed overwrite
-    sink, like :func:`stream_curate` (which also owns snapshot naming,
-    hence the same kwarg guard)."""
-    forbidden = {"snapshot", "store"} & curate_kwargs.keys()
-    if forbidden:
-        raise ValueError(
-            f"stream_audio_curate owns snapshot naming and the store; "
-            f"pass {sorted(forbidden)} as direct arguments, not via curate_kwargs"
-        )
+    key rows — O(kept clips' frames), never audio bytes. The commit
+    re-fingerprints the kept clips' bytes read back from the sink.
+    Delivery and the owned kwargs are :func:`_store_stream`'s."""
+    from ..pipelines import audio_curate
 
-    def _batch(bdf: DataFrame, bid: int) -> None:
-        _audio_curate_batch(
-            bdf, bid, store, out_path,
-            content_col=content_col, id_col=id_col,
-            snapshot_prefix=snapshot_prefix, **curate_kwargs,
-        )
-
-    q = (
-        clips.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    recipe = _curate_recipe(
+        audio_curate, store, content_col=content_col, id_col=id_col, **curate_kwargs
     )
-    _drain(q, timeout_sec, "stream_audio_curate")
 
+    def commit(kept: DataFrame, name: str) -> None:
+        store.append_snapshot(kept.select(id_col, content_col), content_col, id_col, name)
 
-def _image_curate_batch(
-    bdf: DataFrame,
-    bid: int,
-    store,
-    out_path: str,
-    content_col: str,
-    id_col: str,
-    snapshot_prefix: str,
-    **curate_kwargs,
-) -> None:
-    """One micro-batch of :func:`stream_image_curate` — the same replay
-    discipline as the text/audio twins: committed snapshot ⇒ skip;
-    batch-keyed overwrite sink PRECEDES the snapshot commit; the kept
-    rows' hashes are read back from the sink just written (the recipe
-    materialized ``phash`` there), so neither the replay nor the commit
-    re-decodes a single image."""
-    from ..operators.dedup import _fan_out
-    from ..pipelines import image_curate
-
-    name = f"{snapshot_prefix}-{bid:06d}"
-    if any(s["name"] == name for s in store.manifest["snapshots"]):
-        return
-    out = image_curate(
-        _fan_out(bdf), content_col=content_col, id_col=id_col,
-        store=store, snapshot=None, **curate_kwargs,
+    _store_stream(
+        clips, store, out_path, checkpoint, timeout_sec, "stream_audio_curate",
+        snapshot_prefix, curate_kwargs, recipe, "audio_keep", commit,
     )
-    sink = f"{out_path}/batch={bid:06d}"
-    out.write.mode("overwrite").parquet(sink)
-    kept = (
-        bdf.sparkSession.read.parquet(sink)
-        .filter("image_keep")
-        .select(id_col, "phash")
-    )
-    store.append_snapshot(kept, id_col, name, hash_col="phash")
 
 
 def stream_image_curate(
@@ -744,68 +656,23 @@ def stream_image_curate(
     pHashes as snapshot ``{prefix}-{batch_id}`` so the NEXT micro-batch
     dedups against it. Cross-batch state is the
     :class:`~duckdb_vss_spark.index.image_store.ImageHashStore`'s banded
-    hash rows — a few longs per kept image, never pixels. Delivery is
-    effectively-once via the snapshot-name skip + batch-keyed overwrite
-    sink, like its siblings (which also own snapshot naming, hence the
-    same kwarg guard)."""
-    forbidden = {"snapshot", "store"} & curate_kwargs.keys()
-    if forbidden:
-        raise ValueError(
-            f"stream_image_curate owns snapshot naming and the store; "
-            f"pass {sorted(forbidden)} as direct arguments, not via curate_kwargs"
-        )
+    hash rows — a few longs per kept image, never pixels. The commit takes
+    the ``phash`` the recipe materialized in the sink, so neither a replay
+    nor the commit re-decodes an image. Delivery and the owned kwargs are
+    :func:`_store_stream`'s."""
+    from ..pipelines import image_curate
 
-    def _batch(bdf: DataFrame, bid: int) -> None:
-        _image_curate_batch(
-            bdf, bid, store, out_path,
-            content_col=content_col, id_col=id_col,
-            snapshot_prefix=snapshot_prefix, **curate_kwargs,
-        )
-
-    q = (
-        images.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    recipe = _curate_recipe(
+        image_curate, store, content_col=content_col, id_col=id_col, **curate_kwargs
     )
-    _drain(q, timeout_sec, "stream_image_curate")
 
+    def commit(kept: DataFrame, name: str) -> None:
+        store.append_snapshot(kept.select(id_col, "phash"), id_col, name, hash_col="phash")
 
-def _video_curate_batch(
-    bdf: DataFrame,
-    bid: int,
-    store,
-    out_path: str,
-    content_col: str,
-    id_col: str,
-    snapshot_prefix: str,
-    **curate_kwargs,
-) -> None:
-    """One micro-batch of :func:`stream_video_curate` — same replay
-    discipline as the text/audio/image twins: committed snapshot ⇒ skip;
-    batch-keyed overwrite sink PRECEDES the snapshot commit. The replay
-    path re-reads the kept clips' BYTES from the sink and re-fingerprints
-    them through the store's content path (the frame-hash table is
-    per-frame rows, too wide to ride every clip row like the image
-    store's single hash does — the audio twin makes the same trade)."""
-    from ..operators.dedup import _fan_out
-    from ..pipelines import video_curate
-
-    name = f"{snapshot_prefix}-{bid:06d}"
-    if any(s["name"] == name for s in store.manifest["snapshots"]):
-        return
-    out = video_curate(
-        _fan_out(bdf), content_col=content_col, id_col=id_col,
-        store=store, snapshot=None, **curate_kwargs,
+    _store_stream(
+        images, store, out_path, checkpoint, timeout_sec, "stream_image_curate",
+        snapshot_prefix, curate_kwargs, recipe, "image_keep", commit,
     )
-    sink = f"{out_path}/batch={bid:06d}"
-    out.write.mode("overwrite").parquet(sink)
-    kept = (
-        bdf.sparkSession.read.parquet(sink)
-        .filter("video_keep")
-        .select(id_col, content_col)
-    )
-    store.append_snapshot(kept, id_col, name, content_col=content_col)
 
 
 def stream_video_curate(
@@ -827,88 +694,24 @@ def stream_video_curate(
     hashes as snapshot ``{prefix}-{batch_id}`` so the NEXT micro-batch
     dedups against it. Cross-batch state is the
     :class:`~duckdb_vss_spark.index.video_store.VideoFingerprintStore`'s
-    ``(id, t, h)`` rows — three longs per kept frame, never pixels.
-    Delivery is effectively-once via the snapshot-name skip +
-    batch-keyed overwrite sink, like its siblings (which also own
-    snapshot naming, hence the same kwarg guard)."""
-    forbidden = {"snapshot", "store"} & curate_kwargs.keys()
-    if forbidden:
-        raise ValueError(
-            f"stream_video_curate owns snapshot naming and the store; "
-            f"pass {sorted(forbidden)} as direct arguments, not via curate_kwargs"
-        )
+    ``(id, t, h)`` rows — three longs per kept frame, never pixels. The
+    commit re-fingerprints the kept clips' bytes read back from the sink
+    (the frame-hash table is per-frame rows, too wide to ride every clip
+    row like the image store's single hash does). Delivery and the owned
+    kwargs are :func:`_store_stream`'s."""
+    from ..pipelines import video_curate
 
-    def _batch(bdf: DataFrame, bid: int) -> None:
-        _video_curate_batch(
-            bdf, bid, store, out_path,
-            content_col=content_col, id_col=id_col,
-            snapshot_prefix=snapshot_prefix, **curate_kwargs,
-        )
-
-    q = (
-        clips.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    recipe = _curate_recipe(
+        video_curate, store, content_col=content_col, id_col=id_col, **curate_kwargs
     )
-    _drain(q, timeout_sec, "stream_video_curate")
 
+    def commit(kept: DataFrame, name: str) -> None:
+        store.append_snapshot(kept.select(id_col, content_col), id_col, name, content_col=content_col)
 
-def _image_text_curate_batch(
-    bdf: DataFrame,
-    bid: int,
-    store,
-    out_path: str,
-    fetch_fn,
-    html_col: str,
-    id_col: str,
-    snapshot_prefix: str,
-    prefetch_kwargs: dict,
-    **curate_kwargs,
-) -> None:
-    """One micro-batch of :func:`stream_image_text_curate` — the same
-    replay discipline as the text/audio/image/video twins: committed
-    snapshot ⇒ skip (the replay never re-fetches a byte); batch-keyed
-    overwrite sink PRECEDES the snapshot commit; the kept images'
-    pHashes are read back from the pair ledger just written (it
-    materializes ``img_phash``), so neither the replay nor the commit
-    re-decodes an image. The pair ledger is persisted for the batch's
-    lifetime — it is evaluated twice (the fetch queue inside
-    ``fetch_fn``, then the flag-join side of the recipe), and without
-    the persist the HTML parse and the url_canonical window would run
-    twice per micro-batch — and released before the batch returns, so a
-    long stream does not accumulate one cached frame per batch."""
-    from ..broadcasts import untrack_persist
-    from ..operators.dedup import _fan_out, _shared
-    from ..pipelines import image_text_curate, image_text_pairs
-
-    name = f"{snapshot_prefix}-{bid:06d}"
-    if any(s["name"] == name for s in store.manifest["snapshots"]):
-        return
-    pairs = _shared(image_text_pairs(
-        _fan_out(bdf), html_col=html_col, id_col=id_col, **prefetch_kwargs
-    ))
-    try:
-        # the fetch queue is the PRE-fetch verdict: one URL per kept pair
-        queue = (
-            pairs.filter("pair_keep")
-            .select(F.col("img_url_norm").alias("url"))
-            .distinct()
-        )
-        out = image_text_curate(
-            pairs, fetch_fn(queue), store=store, snapshot=None, **curate_kwargs
-        )
-        sink = f"{out_path}/batch={bid:06d}"
-        out.write.mode("overwrite").parquet(sink)
-        kept = (
-            bdf.sparkSession.read.parquet(sink)
-            .filter("img_keep")
-            .select(F.col("img_url_norm"), F.col("img_phash"))
-            .dropDuplicates(["img_url_norm"])
-        )
-        store.append_snapshot(kept, "img_url_norm", name, hash_col="img_phash")
-    finally:
-        untrack_persist(pairs)
+    _store_stream(
+        clips, store, out_path, checkpoint, timeout_sec, "stream_video_curate",
+        snapshot_prefix, curate_kwargs, recipe, "video_keep", commit,
+    )
 
 
 def stream_image_text_curate(
@@ -947,11 +750,16 @@ def stream_image_text_curate(
 
     Cross-batch state is the
     :class:`~duckdb_vss_spark.index.image_store.ImageHashStore`'s banded
-    hash rows — a few longs per kept image, never pixels or captions.
-    Delivery is effectively-once via the snapshot-name skip +
-    batch-keyed overwrite sink, like its siblings (which also own
-    snapshot naming, hence the same kwarg guard). ``prefetch_kwargs``
-    feed :func:`image_text_pairs` (declared-dims and caption gates);
+    hash rows — a few longs per kept image, never pixels or captions. The
+    commit takes the ``img_phash`` the ledger materialized in the sink,
+    so neither a replay (which also never re-fetches a byte) nor the
+    commit re-decodes an image. The pair ledger is persisted for the
+    batch's lifetime: it is evaluated twice (the fetch queue inside
+    ``fetch_fn``, then the flag-join side of the recipe), and without the
+    persist the HTML parse and the url_canonical window would run twice
+    per micro-batch. Delivery and the owned kwargs are
+    :func:`_store_stream`'s. ``prefetch_kwargs`` feed
+    :func:`image_text_pairs` (declared-dims and caption gates);
     ``curate_kwargs`` feed :func:`image_text_curate` (real post-fetch
     gates) — the two stages intentionally keep separate ``min_width``/
     ``min_height`` namespaces."""
@@ -960,28 +768,34 @@ def stream_image_text_curate(
             "stream_image_text_curate requires fetch_fn: the engine owns the "
             "fetch queue and the post-fetch recipe, the caller owns the bytes"
         )
-    forbidden = {"snapshot", "store"} & curate_kwargs.keys()
-    if forbidden:
-        raise ValueError(
-            f"stream_image_text_curate owns snapshot naming and the store; "
-            f"pass {sorted(forbidden)} as direct arguments, not via curate_kwargs"
+    from ..operators.dedup import _fan_out, _shared
+    from ..pipelines import image_text_curate, image_text_pairs
+
+    prefetch_kwargs = dict(prefetch_kwargs or {})
+
+    def recipe(bdf: DataFrame, held: list) -> DataFrame:
+        pairs = _shared(image_text_pairs(
+            _fan_out(bdf), html_col=html_col, id_col=id_col, **prefetch_kwargs
+        ))
+        held.append(pairs)
+        # the fetch queue is the PRE-fetch verdict: one URL per kept pair
+        queue = (
+            pairs.filter("pair_keep")
+            .select(F.col("img_url_norm").alias("url"))
+            .distinct()
+        )
+        return image_text_curate(
+            pairs, fetch_fn(queue), store=store, snapshot=None, **curate_kwargs
         )
 
-    def _batch(bdf: DataFrame, bid: int) -> None:
-        _image_text_curate_batch(
-            bdf, bid, store, out_path, fetch_fn,
-            html_col=html_col, id_col=id_col,
-            snapshot_prefix=snapshot_prefix,
-            prefetch_kwargs=dict(prefetch_kwargs or {}), **curate_kwargs,
-        )
+    def commit(kept: DataFrame, name: str) -> None:
+        kept = kept.select("img_url_norm", "img_phash").dropDuplicates(["img_url_norm"])
+        store.append_snapshot(kept, "img_url_norm", name, hash_col="img_phash")
 
-    q = (
-        pages.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    _store_stream(
+        pages, store, out_path, checkpoint, timeout_sec, "stream_image_text_curate",
+        snapshot_prefix, curate_kwargs, recipe, "img_keep", commit,
     )
-    _drain(q, timeout_sec, "stream_image_text_curate")
 
 
 def stream_warc_ingest(
@@ -1006,8 +820,8 @@ def stream_warc_ingest(
     checkpoint; each micro-batch parses its segments, extracts HTML text,
     and runs the incremental crawl curation against the MinHashStore —
     so segment N+1 near-dedups against everything segment N kept. Sink
-    and store writes share :func:`_crawl_ingest_batch`'s replay guards
-    (batch-keyed overwrite + committed-snapshot skip).
+    and store writes share :func:`stream_crawl_ingest`'s recipe and
+    replay guards.
 
     Parallelism note: one segment file = one task (the same unit as the
     batch path); a micro-batch of S segments fans out S-wide.
@@ -1017,11 +831,8 @@ def stream_warc_ingest(
     MUST extract identical text, or a page kept by a batch run would not
     near-dup against a later streaming run's fingerprints.
     """
-    from ..operators.web import extract_html_text, extract_main_content
-    from ..functions.text import hash64
-    from ..sources.warc import parse_warc_bytes
-
-    import pandas as pd
+    from ..pipelines import _warc_docs
+    from ..sources.warc import _warc_records
 
     files = (
         spark.readStream.format("binaryFile")
@@ -1030,53 +841,16 @@ def stream_warc_ingest(
         .schema("path string, modificationTime timestamp, length long, content binary")
         .option("pathGlobFilter", "*.warc*")
         .load(warc_dir)
-        .select("path", "content")
     )
+    crawl, keep_col, commit = _crawl_hooks(store, "url", "text", "doc_id", ingest_kwargs)
 
-    def _parse(batches):
-        cols = ["record_id", "url", "http_status", "http_content_type", "body"]
-        for pdf in batches:
-            for p, blob in zip(pdf["path"], pdf["content"]):
-                recs = parse_warc_bytes(bytes(blob), warc_file=str(p))
-                rows = [
-                    {c: r[c] for c in cols}
-                    for r in recs
-                    if r["warc_type"] == "response"
-                ]
-                if rows:
-                    yield pd.DataFrame(rows, columns=cols)
+    def recipe(bdf: DataFrame, held: list) -> DataFrame:
+        docs = _warc_docs(
+            _warc_records(bdf), min_status, max_status, html_only, main_content, encoding
+        )
+        return crawl(docs, held)
 
-    def _batch(bdf: DataFrame, bid: int) -> None:
-        recs = bdf.mapInPandas(
-            _parse,
-            schema="record_id string, url string, http_status int, "
-            "http_content_type string, body binary",
-        )
-        ok = recs.filter(
-            (F.col("http_status") >= min_status) & (F.col("http_status") <= max_status)
-        )
-        if html_only:
-            ok = ok.filter(
-                F.lower(F.coalesce("http_content_type", F.lit(""))).contains("html")
-            )
-        ok = ok.withColumn(
-            "doc_id", hash64(F.concat(F.lit("warc:"), F.col("record_id")))
-        )
-        extractor = extract_main_content if main_content else extract_html_text
-        docs = extractor(
-            ok.select("doc_id", "url", "body"), "body", "doc_id",
-            encoding=encoding, carry_cols=("url",),
-        )
-        _crawl_ingest_batch(
-            docs, bid, store, out_path,
-            url_col="url", text_col="text", id_col="doc_id",
-            snapshot_prefix=snapshot_prefix, **ingest_kwargs,
-        )
-
-    q = (
-        files.writeStream.foreachBatch(_batch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    _store_stream(
+        files, store, out_path, checkpoint, timeout_sec, "stream_warc_ingest",
+        snapshot_prefix, ingest_kwargs, recipe, keep_col, commit,
     )
-    _drain(q, timeout_sec, "stream_warc_ingest")

@@ -144,22 +144,6 @@ def test_drop_snapshot_and_vacuum(spark, store_root):
     assert st.match_against(_mk(spark, [(100, BASE[0][1])]), "text", "doc_id").count() == 1
 
 
-def test_empty_snapshot_commits(spark, store_root):
-    """A batch where every row was filtered (all dups of history) still
-    commits an empty snapshot — the crash found by the 500k crawl-ingest
-    measurement (partitioned write of 0 rows leaves no readable files)."""
-    st = MinHashStore.create(spark, store_root)
-    st.append_snapshot(_mk(spark, BASE), "text", "doc_id", "s1")
-    st.append_snapshot(_mk(spark, []), "text", "doc_id", "s2")
-    info = st.info()
-    assert [s["name"] for s in info["snapshots"]] == ["s1", "s2"]
-    assert info["snapshots"][-1]["n_docs"] == 0 and info["n_docs"] == 3
-    # store still fully functional: reads skip the fileless snapshot dir
-    m = st.match_against(_mk(spark, [(9, BASE[0][1])]), "text", "doc_id")
-    assert m.count() == 1
-    assert MinHashStore.open(spark, store_root).info()["n_docs"] == 3
-
-
 def test_append_snapshot_needs_no_read_back(spark, store_root, monkeypatch):
     """The commit count comes from the write job itself (Observation
     fold, round 12), so a transient read failure of the freshly written
@@ -290,45 +274,6 @@ def test_drop_then_append_never_reuses_dir(spark, store_root):
         "snap-000002", "snap-000003"
     ]
     assert sorted(st2.vacuum()) == ["snap-000000", "snap-000001"]
-
-
-def test_legacy_manifest_without_counter_migrates_from_disk(spark, store_root):
-    """A pre-counter manifest allocates 1 + max snap-* index ON DISK
-    (orphans included), so neither a live dir nor a vacuum-pending orphan
-    is ever overwritten."""
-    from duckdb_vss_spark.index import fs
-
-    st = MinHashStore.create(spark, store_root)
-    st.append_snapshot(_mk(spark, [(1, BASE[0][1])]), "text", "doc_id", "s1")
-    st.append_snapshot(_mk(spark, [(2, BASE[1][1])]), "text", "doc_id", "s2")
-    st.drop_snapshot("s1")  # snap-000000 is now an on-disk orphan
-    # simulate a legacy store: strip the counter and rewrite the manifest
-    del st.manifest["next_snap_id"]
-    fs.write_json(spark, fs.join(store_root, "manifest.json"), st.manifest)
-    st3 = MinHashStore.open(spark, store_root)
-    assert "next_snap_id" not in st3.manifest
-    st3.append_snapshot(_mk(spark, [(3, BASE[2][1])]), "text", "doc_id", "s3")
-    assert st3.info()["snapshots"][-1]["dir"] == "snap-000002"
-    assert st3.info()["next_snap_id"] == 3
-
-
-def test_audio_store_drop_then_append_never_reuses_dir(spark, tmp_path):
-    from duckdb_vss_spark.index.audio_store import AudioFingerprintStore
-
-    st = AudioFingerprintStore.create(spark, str(tmp_path / "astore3"))
-    st.append_snapshot(_awavs(spark, [(1, _aclip(1))]), "content", "clip_id", "s1")
-    st.append_snapshot(_awavs(spark, [(2, _aclip(2))]), "content", "clip_id", "s2")
-    st.drop_snapshot("s1")
-    st.append_snapshot(_awavs(spark, [(3, _aclip(3))]), "content", "clip_id", "s3")
-    assert [s["dir"] for s in st.info()["snapshots"]] == [
-        "snap-000001", "snap-000002"
-    ]
-    # s2's fingerprints intact: an exact copy of clip 2 still matches s2
-    m = st.match_against(
-        _awavs(spark, [(90, _aclip(2))]), "content", "clip_id", min_matches=5
-    )
-    assert {(r["store_id"], r["snapshot"]) for r in m.collect()} == {(2, "s2")}
-    assert st.info()["n_clips"] == 2
 
 
 def test_empty_store_schema_tracks_string_ids(spark, store_root, tmp_path):

@@ -161,6 +161,23 @@ def test_beam_search_kernel_matches_bruteforce():
     assert len(set(idx_beam) & want) >= 9
 
 
+def test_beam_search_neighbour_list_with_repeats_returns_unique_ids():
+    """A neighbour list that repeats an id (a seeded long-range edge can
+    land on a near neighbour) must not make the search return that id
+    twice: points on a line, every list names each neighbour twice."""
+    n = 40
+    mat = np.stack([np.arange(n, dtype=np.float64), np.zeros(n)], axis=1)
+    nbrs = np.array(
+        [[min(i + 1, n - 1), min(i + 1, n - 1), max(i - 1, 0), max(i - 1, 0)] for i in range(n)],
+        dtype=np.int32,
+    )
+    q = np.array([17.2, 0.0])
+    idx, nav = _beam_search(mat, nbrs, q, 6, ef=10, metric="l2sq")
+    assert len(idx) == len(set(idx.tolist())) == 6
+    assert set(idx.tolist()) == {15, 16, 17, 18, 19, 20}
+    assert list(nav) == sorted(nav)
+
+
 def test_graph_index_info_row(geng, spark):
     eng, emb = geng
     info = {r["index_name"]: r for r in eng.index_info().collect()}

@@ -74,6 +74,18 @@ def test_knn_match_shape(spark, emb):
         assert scores == sorted(scores)
 
 
+def test_knn_match_keeps_left_column_named_qid(spark, emb):
+    """A probe table keyed by its own ``qid`` column keeps it: the
+    internal per-probe join key must not collide with the caller's."""
+    probes = emb.filter(F.col("vec_id") < 4).withColumnRenamed("vec_id", "qid")
+    out = knn_match(probes, emb, "embedding", "embedding", 2, "l2sq", left_id="qid", right_id="vec_id")
+    assert out.columns == probes.columns + ["matches"]
+    rows = out.collect()
+    assert sorted(r["qid"] for r in rows) == [0, 1, 2, 3]
+    for r in rows:
+        assert r["matches"][0]["row"]["vec_id"] == r["qid"]
+
+
 def test_knn_join_cosine_polarity(spark, emb):
     probes = emb.filter(F.col("vec_id") < 3)
     out = knn_join_flat(

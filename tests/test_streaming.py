@@ -323,7 +323,7 @@ def test_crawl_ingest_batch_replay_idempotent(spark, tmp_path):
     the checkpoint) must not duplicate the batch's rows in the sink: each
     batch overwrites its own batch=NNNNNN subdirectory (ADVICE r5)."""
     from duckdb_vss_spark.index.dedup_store import MinHashStore
-    from duckdb_vss_spark.streaming.ops import _crawl_ingest_batch
+    from duckdb_vss_spark.streaming.ops import _crawl_hooks, _store_batch
 
     st = MinHashStore.create(spark, str(tmp_path / "store"))
     bdf = spark.createDataFrame(
@@ -331,11 +331,13 @@ def test_crawl_ingest_batch_replay_idempotent(spark, tmp_path):
         "doc_id long, url string, text string",
     )
     out_path = str(tmp_path / "out")
-    kw = dict(url_col="url", text_col="text", id_col="doc_id", snapshot_prefix="b")
-    _crawl_ingest_batch(bdf, 0, st, out_path, **kw)
+    hooks = _crawl_hooks(st, "url", "text", "doc_id", {})
+    _store_batch(bdf, 0, st, out_path, "b", *hooks)
     first = spark.read.parquet(out_path).collect()
     assert len(first) == 1 and first[0]["ingest_keep"]
-    _crawl_ingest_batch(bdf, 0, st, out_path, **kw)  # replay after full commit
+    # the commit read the kept row back from the sink: one doc committed
+    assert st.info()["snapshots"][0] == {"name": "b-000000", "dir": "snap-000000", "n_docs": 1}
+    _store_batch(bdf, 0, st, out_path, "b", *hooks)  # replay after full commit
     after = spark.read.parquet(out_path).collect()
     # no duplicate rows AND no flag poisoning: a replayed batch must not
     # re-match its docs against their own committed snapshot (which would

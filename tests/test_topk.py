@@ -4,9 +4,10 @@ per-partition top-k that is the scale-correct plan)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
-from duckdb_vss_spark import array_distance, min_by_k, topk
+from duckdb_vss_spark import array_distance, max_by_k, min_by_k, topk
 
 Q = [((i * 7) % 16) / 16.0 for i in range(64)]
 QSQL = "[" + ",".join(str(x) for x in Q) + "]"
@@ -85,6 +86,18 @@ def test_min_by_k_matches_duckdb(spark, ddb, emb):
             FROM embeddings"""
     ).fetchone()[0]
     assert ours == oracle
+
+
+@pytest.mark.parametrize("parts", [1, 2, 4, 8, 32])
+def test_min_by_k_tie_rule_is_partition_independent(spark, grid, parts):
+    """Without a tiebreak, score ties resolve by the value itself: around
+    [5,5,5] the six distance-1 neighbours tie, and the two picked are the
+    smallest arrays, [4,5,5] then [5,4,5], at every partition count."""
+    score = array_distance("vec", [5.0, 5.0, 5.0])
+    vals = min_by_k(grid.repartition(parts), "vec", score, 3).collect()[0]["values"]
+    assert vals == [[5.0, 5.0, 5.0], [4.0, 5.0, 5.0], [5.0, 4.0, 5.0]]
+    top = max_by_k(grid.repartition(parts), "vec", score, 2).collect()[0]["values"]
+    assert top == [[1.0, 1.0, 1.0], [1.0, 1.0, 9.0]]
 
 
 def test_min_by_k_reference_grid_contract(spark, grid):
